@@ -24,7 +24,9 @@ def main(log32, log8, out, sf):
             "c8_median_s": l[q]["median_s"], "c8_min_s": l[q]["min_s"],
             # ratio of 8-core to 32-core time on the MIN (noise floor):
             # > 1 means extra cores help; ~1 means fixed-latency bound
-            "c8_over_c32_min": round(l[q]["min_s"] / h[q]["min_s"], 3),
+            # (null when the 32-core min is 0: no ratio exists)
+            "c8_over_c32_min": (round(l[q]["min_s"] / h[q]["min_s"], 3)
+                                if h[q]["min_s"] else None),
         }
     rec = {"sf": sf, "cpus_high": 32, "cpus_low": 8,
            "protocol": "graft.Probe, 1 warm-up + 2 timed noop-sink reps per query per core count",

@@ -13,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   * 200 (local mode; on a real cluster this is sized to `sf`).
   */
 object Graft {
-  val DefaultCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  val DefaultCpus: Int = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** `SPARK_GRAFT_CPUS` when set, else the cores this JVM may use. */
+  private[graft] def cpus(env: Option[String]): Int =
+    env.map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The codegen-cache posture every graft session asks for; static
     * conf, so it only takes effect on the FIRST session built in a JVM.

@@ -95,7 +95,7 @@ object Components {
       labels.unpersist()
       Ckpt.release(labels)
       throw new IllegalStateException(
-        s"Components.connected did not converge within ${round * 2} " +
+        s"Components.connected did not converge within ${2 * round + 1} " +
           s"label-propagation hops (maxIter=$maxIter); raise maxIter for " +
           "graphs with longer chain diameters")
     }

@@ -458,17 +458,6 @@ object Dedup {
     jaccardOfCandidates(Ckpt.narrowLazy(shingles(docs, n)), cand, threshold)
   }
 
-  /** MinHash signatures in long form: (doc_id, s, minh) — the classic
-    * rendering, unpivoted from [[minhashWide]]'s single aggregation pass.
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 16): DataFrame = {
-    val sm = (0 until numHashes).map(s =>
-      struct(lit(s.toLong).as("s"), col(s"m$s").as("minh")))
-    minhashWide(sh, numHashes)
-      .select(col("doc_id"), explode(array(sm: _*)).as("sm"))
-      .select(col("doc_id"), col("sm.s").as("s"), col("sm.minh").as("minh"))
-  }
-
   /** LSH band keys: (doc_id, b, band_key) with band_key = md5 of the
     * band's `rowsPerBand` minima joined in seed order. Projected straight
     * off the wide signature row — banding adds NO aggregation or shuffle

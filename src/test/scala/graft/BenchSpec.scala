@@ -27,6 +27,11 @@ class BenchSpec extends AnyFunSuite {
       failHard = true)
   }
 
+  test("session cpus: SPARK_GRAFT_CPUS when set, else the host's processors") {
+    assert(Graft.cpus(Some("6")) == 6)
+    assert(Graft.cpus(None) == Runtime.getRuntime.availableProcessors)
+  }
+
   test("historyMedians: first queries object only, sf-filtered, >= 3 samples") {
     val f = java.nio.file.Files.createTempFile("bh", ".jsonl")
     val lines = Seq(

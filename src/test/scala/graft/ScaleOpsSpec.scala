@@ -98,6 +98,18 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("maxIter"))
   }
 
+  test("components: non-convergence message counts the folded init hop") {
+    import spark.implicits._
+    // maxIter=4 allows two double-hop rounds after the init hop: 5 hops,
+    // short of the 12 a 13-node path needs
+    val edges = (100L until 112L).map(k => (k, k + 1)).toDF("i", "j")
+    val ex = intercept[IllegalStateException] {
+      Components.connected(edges, maxIter = 4)
+    }
+    assert(ex.getMessage.contains(
+      "did not converge within 5 label-propagation hops (maxIter=4)"), ex.getMessage)
+  }
+
   test("components: every near-dup edge ends up inside one cluster, ids are minima") {
     val pairs = Dedup.minhashPairs(
       Tables.load(spark, TestSpark.Sf0001, "documents"),

@@ -1,18 +1,130 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ListenerBusFlush
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 import graft.sources.Tables
 
 /** Source/sink coverage beyond the benchmark parquet: CSV and JSON
   * round-trips (schema preserved, values identical) and a
   * date-partitioned parquet sink whose partitions actually prune at
-  * the scan — the layout a 100 TB events table lives in.
+  * the scan — the layout a 100 TB events table lives in. Also the
+  * `Tables.load` schema cache: a repeat load infers nothing, a rewritten
+  * table or a changed inference conf infers again.
   */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmp(name: String) = s"/tmp/graft_sources/$name"
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"sources-spec-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "schema cache probe")
+    try {
+      val out = body
+      ListenerBusFlush(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** An `events` table whose `ts` is TIMESTAMP(NANOS) — the older data
+    * layout `Tables.load` converts — with pre-epoch and sub-µs instants.
+    * Returns (event_id, ts in ns).
+    */
+  private def writeNanosEvents(dir: String): Seq[(Long, Long)] = {
+    val table = new Path(s"$dir/events.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    table.getFileSystem(conf).delete(table, true)
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val rows = Seq(1L -> -1500L, 2L -> -1000L, 3L -> 0L, 4L -> 999L,
+      5L -> 1700000000123456789L)
+    val w = ExampleParquetWriter.builder(new Path(table, "part-0.parquet"))
+      .withType(schema).withConf(conf).build()
+    val g = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, ns) => w.write(g.newGroup().append("event_id", id).append("ts", ns)) }
+    finally w.close()
+    rows
+  }
+
+  test("schema cache: a repeat load starts no job and returns an equal schema") {
+    val (first, _) = jobsDuring(Tables.load(spark, TestSpark.Sf0001, "orders"))
+    val (again, jobs) = jobsDuring(Tables.load(spark, TestSpark.Sf0001, "orders"))
+    assert(jobs == 0, "a cached schema must not be inferred again")
+    assert(again.schema == first.schema)
+    assert(again.count() == first.count())
+  }
+
+  test("schema cache: a table rewritten at the same path is inferred again") {
+    import spark.implicits._
+    val dir = tmp("rewrite")
+    Seq((1L, "a")).toDF("k", "v").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    assert(jobsDuring(Tables.load(spark, dir, "t"))._2 == 0)
+    Seq((1L, "a", 2.5)).toDF("k", "v", "w").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (df, jobs) = jobsDuring(Tables.load(spark, dir, "t"))
+    assert(jobs > 0, "a rewritten table must be inferred again")
+    assert(df.columns.toSeq == Seq("k", "v", "w"))
+    assert(df.collect().map(_.toSeq).toSeq == Seq(Seq(1L, "a", 2.5)))
+  }
+
+  test("schema cache: a hit still converts nanosecond events.ts to µs timestamps") {
+    val dir = tmp("nanos_events")
+    val rows = writeNanosEvents(dir)
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("event_id").select(col("event_id"), unix_micros(col("ts")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (fresh, inferJobs) = jobsDuring(Tables.load(spark, dir, "events"))
+    assert(inferJobs > 0, "a new path must be inferred")
+    val (hit, hitJobs) = jobsDuring(Tables.load(spark, dir, "events"))
+    assert(hitJobs == 0)
+    assert(fresh.schema("ts").dataType == TimestampType)
+    assert(hit.schema("ts").dataType == TimestampType)
+    assert(read(hit) == read(fresh))
+    assert(read(hit) == rows.map { case (id, ns) => (id, Math.floorDiv(ns, 1000L)) })
+  }
+
+  test("schema cache: flipping nanosAsLong infers again instead of reusing the schema") {
+    val dir = tmp("nanos_flip")
+    writeNanosEvents(dir)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType)
+    Tables.load(spark, dir, "events")
+    assert(jobsDuring(Tables.load(spark, dir, "events"))._2 == 0)
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      // without the flag the reader has no type for TIMESTAMP(NANOS);
+      // only a stale cached schema would let this load succeed
+      val (outcome, jobs) = jobsDuring(scala.util.Try(Tables.load(spark, dir, "events")))
+      assert(jobs > 0, "a changed inference conf must trigger a new inference")
+      assert(outcome.isFailure, s"expected the NANOS column to be rejected, got $outcome")
+    } finally spark.conf.set(key, before)
+    // the failed inference cached nothing: the original entry still serves
+    val (back, jobs) = jobsDuring(Tables.load(spark, dir, "events"))
+    assert(jobs == 0)
+    assert(back.schema("ts").dataType == TimestampType)
+  }
 
   test("csv round-trip: orders survive header+schema read unchanged") {
     val orig = Tables.load(spark, TestSpark.Sf0001, "orders")
