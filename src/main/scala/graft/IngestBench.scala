@@ -53,9 +53,18 @@ import org.apache.spark.sql.functions._
   * Usage: `IngestBench <outPath> <sfDir> <numBatches>`; set
   * `SPARK_GRAFT_INGEST_TIERS` (comma-separated tier names) to probe a
   * subset — the scale (30×) record targets the heaviest state tiers
-  * rather than paying the full 10-tier sweep at every corpus size.
+  * rather than paying the full 11-tier sweep at every corpus size.
   */
 object IngestBench {
+
+  /** One ingest tier's sweep: `ingest(i, state)` lands batch i, `probe`
+    * is the fixed measurement over the state, `compact` the tier's
+    * compaction job (None: it has none). `word` names the measurement in
+    * the stderr progress lines.
+    */
+  private final case class Tier(name: String, word: String,
+      ingest: (Int, String) => Unit, probe: String => DataFrame,
+      compact: Option[String => Option[Long]])
 
   private def probeMin(spark: SparkSession, mk: () => DataFrame): Double = {
     def once() = Bench.timeOnce(spark, "", (_, _) => mk())
@@ -67,7 +76,7 @@ object IngestBench {
     require(args.length == 3, "usage: IngestBench <outPath> <sfDir> <numBatches>")
     val (outPath, sfDir, nBatches) = (args(0), args(1), args(2).toInt)
     val spark = Graft.session(appName = "graft-ingestbench", failOnConfMismatch = true)
-    import graft.operators.{Dedup, Similarity, TextIndex}
+    import graft.operators.{Dedup, Multimodal, Similarity, TextIndex}
     import graft.sources.Tables
     import graft.streaming.Streams
 
@@ -87,256 +96,108 @@ object IngestBench {
         byBatches.map { case (b, t) => "\"" + b + "\":" + num(t) }.mkString("{", ",", "}") +
         ",\"after_compact\":" + num(after) + "}"
 
+    lazy val events = Tables.load(spark, sfDir, "events")
+    lazy val nEv = events.count()
+    def shard(df: DataFrame, key: String, i: Int) =
+      df.filter(pmod(col(key), lit(nBatches)) === i)
+    val tiers = Seq(
+      Tier("neardup", "probe",
+        (i, s) => Streams.ingestNearDupBatch(shard(docs, "doc_id", i), s, i),
+        s => Dedup.incrementalNearDupEdgesIndexed(Streams.ingestIndex(spark, s).get, probeDocs),
+        Some(Streams.compactNearDup(spark, _))),
+      Tier("ivf", "probe",
+        (i, s) => Streams.ingestIvfBatch(shard(emb, "vec_id", i), s, i),
+        s => Similarity.ivfSearch(Streams.ingestIvfIndex(spark, s).get, probeQs, k = 10),
+        Some(Streams.compactIvf(spark, _))),
+      Tier("text", "probe",
+        (i, s) => Streams.ingestTextIndexBatch(shard(docs, "doc_id", i), s, i),
+        s => TextIndex.bm25(Streams.ingestTextIndexRead(spark, s).get, probeTerms),
+        Some(Streams.compactTextIndex(spark, _))),
+      Tier("bloom", "probe",
+        (i, s) => Streams.ingestBloomBatch(shard(docs, "doc_id", i), s, i),
+        s => Streams.ingestBloomProbe(spark, s, probeDocs).get,
+        Some(Streams.compactBloom(spark, _))),
+      // no compact job: partials are O(columns) rows; the flat read cost
+      // IS the claim this measures
+      Tier("profile", "fold",
+        (i, s) => Streams.ingestProfileBatch(shard(docs, "doc_id", i), s, i),
+        s => Streams.ingestProfileRead(spark, s).get, None),
+      // per-(source, split) integer doc/token partials: the live face of
+      // the stored-manifest budget
+      Tier("budget", "fold",
+        (i, s) => Streams.ingestBudgetBatch(shard(docs, "doc_id", i), s, i),
+        s => Streams.ingestBudgetRead(spark, s).get,
+        Some(Streams.compactBudget(spark, _))),
+      Tier("valuehist", "fold",
+        (i, s) => Streams.ingestValueHistBatch(shard(events, "event_id", i), s, i,
+          groupCol = "event_type", valueCol = "value"),
+        s => Streams.ingestRobustOutliers(spark, s).get,
+        Some(Streams.compactValueHist(spark, _))),
+      Tier("centroids", "fold",
+        (i, s) => Streams.ingestCentroidsBatch(shard(emb, "vec_id", i), s, i),
+        s => Streams.ingestCentroidsRead(spark, s).get,
+        Some(Streams.compactCentroids(spark, _))),
+      // order-sensitive: CONTIGUOUS event-id ranges, not pmod shards — id
+      // order is event-time order in this corpus, and the tier's contract
+      // is per-user monotone batches
+      Tier("transitions", "fold",
+        { (i, s) =>
+          val lo = i * nEv / nBatches
+          val hi = if (i == nBatches - 1) Long.MaxValue else (i + 1) * nEv / nBatches
+          Streams.ingestTransitionsBatch(
+            events.filter(col("event_id") >= lo && col("event_id") < hi), s, i)
+        },
+        s => Streams.ingestTransitionsRead(spark, s).get,
+        Some(Streams.compactTransitions(spark, _))),
+      // per-user candidate rows accumulate 2/user/batch until compaction
+      // re-ranks them back to 2/user
+      Tier("hazard", "fold",
+        (i, s) => Streams.ingestHazardBatch(shard(events, "user_id", i), s, i),
+        s => Streams.ingestHazardRead(spark, s).get,
+        Some(Streams.compactHazard(spark, _))),
+      // decode-once multimodal ingest: each batch pays the codec pass for
+      // ITS payloads only
+      Tier("imgfeat", "fold",
+        (i, s) => Streams.ingestImageFeaturesBatch(
+          Multimodal.pngCorpus(shard(docs, "doc_id", i)).toDF(), s, i),
+        s => Streams.ingestImageFeaturesRead(spark, s).get,
+        Some(Streams.compactImageFeatures(spark, _))))
+
     // optional tier subset (comma-separated SPARK_GRAFT_INGEST_TIERS):
-    // a 30x corpus makes the full 10-tier sweep hours long — at scale
+    // a 30x corpus makes the full 11-tier sweep hours long — at scale
     // the record targets the heaviest state tiers, not all of them
-    val KnownTiers = Seq("neardup", "ivf", "text", "bloom", "profile",
-      "budget", "valuehist", "centroids", "transitions", "hazard",
-      "imgfeat")
+    val KnownTiers = tiers.map(_.name)
     val only = sys.env.get("SPARK_GRAFT_INGEST_TIERS")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { t =>
       val unknown = t -- KnownTiers.toSet
       require(unknown.isEmpty, s"unknown ingest tiers: ${unknown.mkString(",")}")
     }
-    def on(name: String): Boolean = only.forall(_.contains(name))
-    val tierParts = scala.collection.mutable.ListBuffer[String]()
-
-    // ——— near-dup tier ———
-    if (on("neardup")) {
-    val ndState = s"$root/neardup"
-    val ndPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestNearDupBatch(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), ndState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () => Dedup.incrementalNearDupEdgesIndexed(
-          Streams.ingestIndex(spark, ndState).get, probeDocs))
-        System.err.println(f"[ingestbench] neardup probe @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactNearDup(spark, ndState).contains((nBatches - 1).toLong))
-    val ndAfter = probeMin(spark, () => Dedup.incrementalNearDupEdgesIndexed(
-      Streams.ingestIndex(spark, ndState).get, probeDocs))
-    System.err.println(f"[ingestbench] neardup probe after compact: $ndAfter%.3f s")
-    tierParts += s""""neardup":${tierJson(ndPoints, ndAfter)}"""
-    }
-
-    // ——— ivf tier ———
-    if (on("ivf")) {
-    val ivfState = s"$root/ivf"
-    val ivfPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestIvfBatch(emb.filter(pmod(col("vec_id"), lit(nBatches)) === i), ivfState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Similarity.ivfSearch(Streams.ingestIvfIndex(spark, ivfState).get, probeQs, k = 10))
-        System.err.println(f"[ingestbench] ivf probe @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactIvf(spark, ivfState).contains((nBatches - 1).toLong))
-    val ivfAfter = probeMin(spark, () =>
-      Similarity.ivfSearch(Streams.ingestIvfIndex(spark, ivfState).get, probeQs, k = 10))
-    System.err.println(f"[ingestbench] ivf probe after compact: $ivfAfter%.3f s")
-    tierParts += s""""ivf":${tierJson(ivfPoints, ivfAfter)}"""
-    }
-
-    // ——— text-index tier ———
-    if (on("text")) {
-    val txState = s"$root/text"
-    val txPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestTextIndexBatch(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), txState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          TextIndex.bm25(Streams.ingestTextIndexRead(spark, txState).get, probeTerms))
-        System.err.println(f"[ingestbench] text probe @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactTextIndex(spark, txState).contains((nBatches - 1).toLong))
-    val txAfter = probeMin(spark, () =>
-      TextIndex.bm25(Streams.ingestTextIndexRead(spark, txState).get, probeTerms))
-    System.err.println(f"[ingestbench] text probe after compact: $txAfter%.3f s")
-    tierParts += s""""text":${tierJson(txPoints, txAfter)}"""
-    }
-
-    // ——— bloom tier ———
-    if (on("bloom")) {
-    val blState = s"$root/bloom"
-    val blPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestBloomBatch(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), blState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestBloomProbe(spark, blState, probeDocs).get)
-        System.err.println(f"[ingestbench] bloom probe @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactBloom(spark, blState).contains((nBatches - 1).toLong))
-    val blAfter = probeMin(spark, () =>
-      Streams.ingestBloomProbe(spark, blState, probeDocs).get)
-    System.err.println(f"[ingestbench] bloom probe after compact: $blAfter%.3f s")
-    tierParts += s""""bloom":${tierJson(blPoints, blAfter)}"""
-    }
-
-    // ——— profile tier (no compact job: partials are O(columns) rows;
-    // the flat read cost IS the claim this measures) ———
-    if (on("profile")) {
-    val prState = s"$root/profile"
-    val prPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestProfileBatch(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), prState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestProfileRead(spark, prState).get)
-        System.err.println(f"[ingestbench] profile fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    val prAfter = prPoints.last._2 // no compact: "after" = the final fold
-    tierParts += s""""profile":${tierJson(prPoints, prAfter)}"""
-    }
-
-    // ——— budget tier (per-(source, split) integer doc/token partials;
-    // the live face of the stored-manifest budget) ———
-    if (on("budget")) {
-    val bgState = s"$root/budget"
-    val bgPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestBudgetBatch(
-        docs.filter(pmod(col("doc_id"), lit(nBatches)) === i), bgState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestBudgetRead(spark, bgState).get)
-        System.err.println(f"[ingestbench] budget fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactBudget(spark, bgState).contains((nBatches - 1).toLong))
-    val bgAfter = probeMin(spark, () =>
-      Streams.ingestBudgetRead(spark, bgState).get)
-    System.err.println(f"[ingestbench] budget fold after compact: $bgAfter%.3f s")
-    tierParts += s""""budget":${tierJson(bgPoints, bgAfter)}"""
-    }
-
-    lazy val events = Tables.load(spark, sfDir, "events")
-
-    // ——— value-histogram tier (pure-mergeable partials at (grp, cents)
-    // grain; the compact job folds N batch dirs into one base) ———
-    if (on("valuehist")) {
-    val vhState = s"$root/valuehist"
-    val vhPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestValueHistBatch(
-        events.filter(pmod(col("event_id"), lit(nBatches)) === i),
-        vhState, i, groupCol = "event_type", valueCol = "value")
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestRobustOutliers(spark, vhState).get)
-        System.err.println(f"[ingestbench] valuehist fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactValueHist(spark, vhState).contains((nBatches - 1).toLong))
-    val vhAfter = probeMin(spark, () =>
-      Streams.ingestRobustOutliers(spark, vhState).get)
-    System.err.println(f"[ingestbench] valuehist fold after compact: $vhAfter%.3f s")
-    tierParts += s""""valuehist":${tierJson(vhPoints, vhAfter)}"""
-    }
-
-    // ——— centroids tier (exact-integer mergeable at label grain; the
-    // compact job stores merged SUMS so later deltas keep folding) ———
-    if (on("centroids")) {
-    val ctState = s"$root/centroids"
-    val ctPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestCentroidsBatch(
-        emb.filter(pmod(col("vec_id"), lit(nBatches)) === i), ctState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestCentroidsRead(spark, ctState).get)
-        System.err.println(f"[ingestbench] centroids fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactCentroids(spark, ctState).contains((nBatches - 1).toLong))
-    val ctAfter = probeMin(spark, () =>
-      Streams.ingestCentroidsRead(spark, ctState).get)
-    System.err.println(f"[ingestbench] centroids fold after compact: $ctAfter%.3f s")
-    tierParts += s""""centroids":${tierJson(ctPoints, ctAfter)}"""
-    }
-
-    // ——— transitions tier (order-sensitive: CONTIGUOUS event-id
-    // ranges, not pmod shards — id order is event-time order in this
-    // corpus, and the tier's contract is per-user monotone batches) ———
-    if (on("transitions")) {
-    val nEv = events.count()
-    val trState = s"$root/transitions"
-    val trPoints = (0 until nBatches).flatMap { i =>
-      val lo = i * nEv / nBatches
-      val hi = if (i == nBatches - 1) Long.MaxValue else (i + 1) * nEv / nBatches
-      Streams.ingestTransitionsBatch(
-        events.filter(col("event_id") >= lo && col("event_id") < hi),
-        trState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestTransitionsRead(spark, trState).get)
-        System.err.println(f"[ingestbench] transitions fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactTransitions(spark, trState).contains((nBatches - 1).toLong))
-    val trAfter = probeMin(spark, () =>
-      Streams.ingestTransitionsRead(spark, trState).get)
-    System.err.println(f"[ingestbench] transitions fold after compact: $trAfter%.3f s")
-    tierParts += s""""transitions":${tierJson(trPoints, trAfter)}"""
-    }
-
-    // ——— hazard tier (order-independent mergeable like the profile
-    // fold, but WITH a compact job: per-user candidate rows accumulate
-    // 2/user/batch until compaction re-ranks them back to 2/user) ———
-    if (on("hazard")) {
-    val hzState = s"$root/hazard"
-    val hzPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestHazardBatch(
-        events.filter(pmod(col("user_id"), lit(nBatches)) === i), hzState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestHazardRead(spark, hzState).get)
-        System.err.println(f"[ingestbench] hazard fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactHazard(spark, hzState).contains((nBatches - 1).toLong))
-    val hzAfter = probeMin(spark, () =>
-      Streams.ingestHazardRead(spark, hzState).get)
-    System.err.println(f"[ingestbench] hazard fold after compact: $hzAfter%.3f s")
-    tierParts += s""""hazard":${tierJson(hzPoints, hzAfter)}"""
-    }
-
-    // ——— image-features tier (decode-once multimodal ingest: each
-    // batch pays the codec pass for ITS payloads only; the probe is
-    // the accumulated feature-table fold, which compaction keeps at
-    // one file group) ———
-    if (on("imgfeat")) {
-    val imState = s"$root/imgfeat"
-    val imPoints = (0 until nBatches).flatMap { i =>
-      Streams.ingestImageFeaturesBatch(
-        graft.operators.Multimodal.pngCorpus(
-          docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)).toDF(),
-        imState, i)
-      if (probed(i)) {
-        val t = probeMin(spark, () =>
-          Streams.ingestImageFeaturesRead(spark, imState).get)
-        System.err.println(f"[ingestbench] imgfeat fold @ ${i + 1} batches: $t%.3f s")
-        Some((i + 1, t))
-      } else None
-    }
-    require(Streams.compactImageFeatures(spark, imState).contains((nBatches - 1).toLong))
-    val imAfter = probeMin(spark, () =>
-      Streams.ingestImageFeaturesRead(spark, imState).get)
-    System.err.println(f"[ingestbench] imgfeat fold after compact: $imAfter%.3f s")
-    tierParts += s""""imgfeat":${tierJson(imPoints, imAfter)}"""
+    val tierParts = for (t <- tiers if only.forall(_.contains(t.name))) yield {
+      val state = s"$root/${t.name}"
+      def probe(): Double = probeMin(spark, () => t.probe(state))
+      val points = (0 until nBatches).flatMap { i =>
+        t.ingest(i, state)
+        if (probed(i)) {
+          val p = probe()
+          System.err.println(f"[ingestbench] ${t.name} ${t.word} @ ${i + 1} batches: $p%.3f s")
+          Some((i + 1, p))
+        } else None
+      }
+      val after = t.compact match {
+        case Some(compact) =>
+          require(compact(state).contains((nBatches - 1).toLong))
+          val p = probe()
+          System.err.println(f"[ingestbench] ${t.name} ${t.word} after compact: $p%.3f s")
+          p
+        case None => points.last._2 // no compact: "after" = the final fold
+      }
+      s""""${t.name}":${tierJson(points, after)}"""
     }
 
     spark.stop()
     // record WHICH tiers ran: a SPARK_GRAFT_INGEST_TIERS subset sweep
-    // must be distinguishable from a full 10-tier sweep downstream
+    // must be distinguishable from a full 11-tier sweep downstream
     val subsetField = only match {
       case Some(t) =>
         val sel = KnownTiers.filter(t.contains)

@@ -3,7 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
-import graft.operators.{Dedup, Similarity, Sketches, TextIndex}
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.expressions.Window
+import graft.operators.{Dedup, Multimodal, Prep, Profile, Sessions, Similarity, Sketches, TextIndex}
 
 /** Structured Streaming tier over the `events` dataflow (SURVEY.md §2.5
   * streaming row, §7 step 7).
@@ -130,418 +133,368 @@ object Streams {
         col("p_ts"), col("c_ts"))
   }
 
-  /** Streaming ingest near-dup — the `foreachBatch` composition that
-    * closes the loop between the streaming tier and the incremental
-    * dedup tier: each micro-batch of documents is deduped against the
-    * ACCUMULATED corpus index (the persisted shingle/band frames of
-    * every prior batch — the `Dedup.writeIndex` artifact shape), then
-    * appended to it. This is the actual shape of a production ingest:
-    * per batch, only the new documents are shingled; the corpus side is
-    * parquet reads of narrow index frames.
-    *
-    * Artifacts under `stateDir` (a distributed FS path in production):
-    *   - `shingles/batch=N`, `bands/batch=N` — the accumulated index
-    *   - `edges/batch=N` — verified near-dup edges touching batch N
-    *     (including batch-internal pairs), ≡
-    *     `Dedup.incrementalNearDupEdges(prior batches, batch N)` —
-    *     differentially tested, micro-batch by micro-batch
-    *   - `_committed/N` — written LAST per batch
-    *
-    * Exactly-once across restarts: a replayed batch id that is already
-    * committed is skipped; a batch that crashed mid-write left no marker
-    * and its batch-scoped dirs are simply overwritten on replay. Readers
-    * ([[ingestIndex]]/[[ingestEdges]]) see only committed batches, so a
-    * partial write is never observed.
+  // ——— streaming ingest ———
+  //
+  // Every `foreachBatch` tier below goes through one protocol, kept in the
+  // private functions that follow. A tier's state dir (any Hadoop
+  // FileSystem path, so HDFS and object stores work too) holds each
+  // micro-batch's frames plus a commit marker per batch, and, after a
+  // compaction, a base holding the tier's standalone artifact plus a
+  // compaction marker. Marker last: every frame a marker publishes is
+  // durable before the marker is written, so a crash mid-write leaves
+  // readers on the previous view and a replay overwrites the partial batch
+  // dirs (markers on object stores need read-after-write consistency, which
+  // S3/GCS/ABFS provide). Commit markers are never deleted: they are the
+  // replay-skip contract. A reader lists the view once (base C = the newest
+  // compaction marker, deltas = committed ids above C); compaction folds
+  // exactly the view it listed, so a batch that commits mid-compact stays a
+  // delta until the next run. New tiers go through `start`, `commit`,
+  // `view` and `compact` and never write a marker themselves.
+
+  private val Committed = "_committed" // one empty file per committed batch id
+  private val Compacted = "_compacted" // one empty file per base, named C
+  /** The base folding every committed batch id ≤ `c`. */
+  private def baseDir(stateDir: String, c: Long): String = s"$stateDir/base/compact=$c"
+  /** Where batch `id` writes `frame`. */
+  private def batchDir(stateDir: String, frame: String, id: Long): String =
+    s"$stateDir/$frame/batch=$id"
+
+  /** A state dir's committed view, listed once: compaction watermark `c`
+    * (-1 before the first compaction) and every committed batch id.
     */
-  def ingestNearDup(
-      docs: DataFrame, stateDir: String, checkpointDir: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.7,
-      maxBucketSize: Int = Dedup.NearDupMaxBucket): StreamingQuery =
-    docs.writeStream
+  private[graft] final case class View(
+      spark: SparkSession, dir: String, c: Long, committed: Seq[Long]) {
+    /** Committed batches the base does not cover, ascending. */
+    val ids: Seq[Long] = committed.filter(_ > c)
+    def isEmpty: Boolean = c < 0 && ids.isEmpty
+    def base: String = baseDir(dir, c)
+    /** `frame`'s base copy (at `inBase` under the base) then each delta's. */
+    def paths(frame: String, inBase: String): Seq[String] =
+      (if (c >= 0) Seq(s"$base/$inBase") else Nil) ++ ids.map(batchDir(dir, frame, _))
+    def frame(name: String): DataFrame = spark.read.parquet(paths(name, name): _*)
+    /** `f` over this view; None before the first commit. */
+    def ifAny[T](f: View => T): Option[T] = if (isEmpty) None else Some(f(this))
+  }
+
+  private[graft] def view(spark: SparkSession, stateDir: String): View = {
+    val fs = fileSystem(spark, stateDir)
+    def ids(marker: String): Seq[Long] = {
+      val d = new Path(s"$stateDir/$marker")
+      if (!fs.exists(d)) Nil else fs.listStatus(d).toSeq.map(_.getPath.getName.toLong).sorted
+    }
+    View(spark, stateDir, ids(Compacted).lastOption.getOrElse(-1L), ids(Committed))
+  }
+
+  /** Start a stream whose every micro-batch runs `step`. */
+  private def start(in: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestNearDupBatch(batch.toDF(), stateDir, batchId,
-          n, numHashes, rowsPerBand, threshold, maxBucketSize)
-      }
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => step(batch.toDF(), batchId))
       .start()
+
+  /** One ingest step. A replayed (already committed) id is a durable
+    * no-op; otherwise `frames` sees the prior view and names the batch's
+    * frames, which are written before the commit marker.
+    */
+  private def commit(batch: DataFrame, stateDir: String, batchId: Long)(
+      frames: View => Seq[(String, DataFrame)]): Unit = {
+    val v = view(batch.sparkSession, stateDir)
+    if (!v.committed.contains(batchId)) {
+      for ((f, df) <- frames(v)) save(df, batchDir(stateDir, f, batchId))
+      mark(v, Committed, batchId)
+    }
+  }
+
+  /** Fold the view listed once into the base of its newest delta C, then
+    * write C's compaction marker and delete the covered `frames` batch
+    * dirs and the previous base. Returns C, or None when nothing is new.
+    */
+  private[graft] def compact(spark: SparkSession, stateDir: String,
+      frames: Seq[String])(fold: (View, String) => Unit): Option[Long] = {
+    val v = view(spark, stateDir)
+    v.ids.lastOption.map { c =>
+      fold(v, baseDir(stateDir, c))
+      mark(v, Compacted, c)
+      gcCovered(v, frames)
+      c
+    }
+  }
+
+  /** The pure-mergeable fold: `merge` over the view's `frame` partials,
+    * stored as the new base's `frame`.
+    */
+  private[graft] def foldMerged(frame: String, merge: DataFrame => DataFrame)(
+      v: View, out: String): Unit =
+    save(merge(v.frame(frame)), s"$out/$frame")
+
+  private def compactMerged(spark: SparkSession, stateDir: String, frame: String)(
+      merge: DataFrame => DataFrame): Option[Long] =
+    compact(spark, stateDir, Seq(frame))(foldMerged(frame, merge))
+
+  private def save(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").parquet(path)
+
+  private def mark(v: View, marker: String, id: Long): Unit = {
+    val fs = fileSystem(v.spark, v.dir)
+    fs.mkdirs(new Path(s"${v.dir}/$marker"))
+    fs.create(new Path(s"${v.dir}/$marker/$id"), true).close()
+  }
+
+  /** Best-effort, after the marker: a crash mid-GC only leaves extra files
+    * that no reader lists (readers see the newest base and the deltas
+    * above it).
+    */
+  private def gcCovered(v: View, frames: Seq[String]): Unit = {
+    val fs = fileSystem(v.spark, v.dir)
+    def rm(p: String): Unit =
+      try fs.delete(new Path(p), true) catch { case NonFatal(_) => () }
+    for (f <- frames; i <- v.ids) rm(batchDir(v.dir, f, i))
+    if (v.c >= 0) rm(v.base)
+  }
+
+  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Streaming ingest near-dup: each micro-batch of documents is deduped
+    * against the ACCUMULATED corpus index (the shingle/band frames of
+    * every prior batch, the `Dedup.writeIndex` artifact shape), then
+    * appended to it. Per batch only the new documents are shingled; the
+    * corpus side is parquet reads of narrow index frames.
+    *
+    * Frames: `shingles` and `bands` (the accumulated index) and `edges`,
+    * the verified near-dup edges touching the batch (including
+    * batch-internal pairs), ≡ `Dedup.incrementalNearDupEdges(prior
+    * batches, batch)`, differentially tested micro-batch by micro-batch.
+    * The band layout is Dedup's default (n=3, 16 hashes, 4 rows per band).
+    */
+  def ingestNearDup(docs: DataFrame, stateDir: String,
+      checkpointDir: String): StreamingQuery =
+    start(docs, checkpointDir)(ingestNearDupBatch(_, stateDir, _))
 
   /** One ingest step (see [[ingestNearDup]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
     */
-  def ingestNearDupBatch(
-      batch: DataFrame, stateDir: String, batchId: Long,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.7,
-      maxBucketSize: Int = Dedup.NearDupMaxBucket): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed, durable
-    // empty prior index for the first batch: the incremental pass then
-    // returns exactly the batch-internal pairs (every pair "touches the
-    // delta"), so one code path serves bootstrap and steady state
-    val idx = ingestIndex(spark, stateDir, n, numHashes, rowsPerBand)
-      .getOrElse(Dedup.buildIndex(batch.limit(0), n, numHashes, rowsPerBand))
-    Dedup.incrementalNearDupEdgesIndexed(idx, batch, threshold, maxBucketSize)
-      .write.mode("overwrite").parquet(s"$stateDir/edges/batch=$batchId")
-    val sh = Dedup.shingles(batch, n)
-    sh.write.mode("overwrite").parquet(s"$stateDir/shingles/batch=$batchId")
-    Dedup.lshBands(sh, numHashes, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
-
-  /** Write the `_committed/<batchId>` marker LAST — the ONE definition
-    * of the commit protocol all three ingest tiers share. Goes through
-    * the Hadoop FileSystem of the state dir, so the same code runs
-    * against HDFS/object stores, not just local disk (object-store
-    * caveat: marker visibility needs read-after-write consistency,
-    * which S3/GCS/ABFS all provide today).
-    */
-  private def markCommitted(spark: SparkSession, stateDir: String,
-      batchId: Long): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_committed"))
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_committed/$batchId"), true).close()
-  }
+  def ingestNearDupBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId) { v =>
+      // empty prior index for the first batch: the incremental pass then
+      // returns exactly the batch-internal pairs (every pair "touches the
+      // delta"), so one code path serves bootstrap and steady state
+      val idx = v.ifAny(nearDupIndex).getOrElse(Dedup.buildIndex(batch.limit(0)))
+      val sh = Dedup.shingles(batch)
+      Seq("edges" -> Dedup.incrementalNearDupEdgesIndexed(idx, batch),
+        "shingles" -> sh, "bands" -> Dedup.lshBands(sh))
+    }
 
   /** The accumulated ingest index over all COMMITTED batches (None
     * before the first commit) — directly searchable by the incremental
     * Dedup operators. After a [[compactNearDup]] the base's canonical
-    * frames stand in for the batches they folded: the read is base +
-    * uncompacted deltas, so probe cost stays flat in batch count.
+    * frames stand in for the batches they folded, so probe cost stays
+    * flat in batch count.
     */
-  def ingestIndex(spark: SparkSession, stateDir: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4): Option[Dedup.DedupIndex] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      if (c >= 0) {
-        val m = spark.read.parquet(s"${baseDir(stateDir, c)}/index/meta").head
-        require(m.getAs[Int]("n") == n && m.getAs[Int]("num_hashes") == numHashes &&
-            m.getAs[Int]("rows_per_band") == rowsPerBand,
-          s"ingestIndex params ($n,$numHashes,$rowsPerBand) differ from the " +
-            s"compacted base's manifest ($m) — refusing to mix band layouts")
-      }
-      val basePfx = if (c >= 0) Seq(s"${baseDir(stateDir, c)}/index") else Nil
-      Some(Dedup.DedupIndex(
-        spark.read.parquet(basePfx.map(_ + "/shingles") ++
-          ids.map(i => s"$stateDir/shingles/batch=$i"): _*),
-        spark.read.parquet(basePfx.map(_ + "/bands") ++
-          ids.map(i => s"$stateDir/bands/batch=$i"): _*),
-        n, numHashes, rowsPerBand))
+  def ingestIndex(spark: SparkSession, stateDir: String): Option[Dedup.DedupIndex] =
+    view(spark, stateDir).ifAny(nearDupIndex)
+
+  private def nearDupIndex(v: View): Dedup.DedupIndex = {
+    val (n, numHashes, rowsPerBand) = (3, 16, 4)
+    if (v.c >= 0) {
+      val m = v.spark.read.parquet(s"${v.base}/index/meta").head
+      require(m.getAs[Int]("n") == n && m.getAs[Int]("num_hashes") == numHashes &&
+          m.getAs[Int]("rows_per_band") == rowsPerBand,
+        s"the near-dup band layout ($n,$numHashes,$rowsPerBand) differs from the " +
+          s"compacted base's manifest ($m) — refusing to mix band layouts")
     }
+    def read(f: String) = v.spark.read.parquet(v.paths(f, s"index/$f"): _*)
+    Dedup.DedupIndex(read("shingles"), read("bands"), n, numHashes, rowsPerBand)
   }
 
   /** All committed near-dup edges of an [[ingestNearDup]] run so far
     * (compacted base edges + uncompacted delta batches).
     */
-  def ingestEdges(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else Some(spark.read.parquet(
-      (if (c >= 0) Seq(s"${baseDir(stateDir, c)}/edges") else Nil) ++
-        ids.map(i => s"$stateDir/edges/batch=$i"): _*))
-  }
+  def ingestEdges(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(_.frame("edges"))
 
-  /** Fold every committed near-dup ingest batch (and any prior base)
-    * into a fresh canonical base: `base/compact=C/index` in the
-    * [[Dedup.writeIndex]] layout (loadable by [[Dedup.loadIndex]] as a
-    * standalone artifact) plus `base/compact=C/edges`, where C is the
-    * newest committed batch folded in. The `_compacted/C` marker is
-    * written LAST — the same commit protocol as the ingest itself, so a
-    * crash mid-compact leaves readers on the previous view. Covered
-    * batch dirs and the previous base are then deleted (set `gc = false`
-    * when long-lived readers may still hold lazy plans over them — a
-    * production job GCs on a delay horizon instead).
-    *
-    * Safe against a live ingest: only batches committed at the time of
-    * the listing are folded; a batch that commits mid-compact stays a
-    * delta until the next cadence run. Returns the new watermark C, or
-    * None when there is nothing new to fold.
+  /** Fold the committed near-dup batches (and any prior base) into a
+    * base with `index/` in the [[Dedup.writeIndex]] layout (loadable by
+    * [[Dedup.loadIndex]] as a standalone artifact) plus `edges/`.
     */
-  def compactNearDup(spark: SparkSession, stateDir: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val idx = ingestIndex(spark, stateDir, n, numHashes, rowsPerBand).get
-      Dedup.compactIndex(idx, s"${baseDir(stateDir, c)}/index")
-      ingestEdges(spark, stateDir).get.write.mode("overwrite")
-        .parquet(s"${baseDir(stateDir, c)}/edges")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids,
-        Seq("shingles", "bands", "edges"))
-      Some(c)
+  def compactNearDup(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("shingles", "bands", "edges")) { (v, out) =>
+      Dedup.compactIndex(nearDupIndex(v), s"$out/index")
+      save(v.frame("edges"), s"$out/edges")
     }
-  }
 
   /** Streaming embedding ingest — the [[ingestNearDup]] shape on the
     * similarity tier: the FIRST micro-batch is the index build job
-    * (k-means-trained on the bootstrap vectors, centroids + stride
-    * persisted once), and every later batch runs the q87 contract —
-    * assign ONLY the batch's vectors against the stored broadcast
-    * centroids ([[Similarity.ivfAssign]]) and persist the batch's
-    * assignment rows. Centroids never move per ingest (production
-    * retrains on a cadence as a separate build job), so the accumulated
-    * assignment is differentially ≡ a batch-mode [[Similarity.ivfAppend]]
-    * chain over the same cuts — tested micro-batch by micro-batch,
-    * across restarts.
-    *
-    * Artifacts under `stateDir`: `cents/` + `meta/` (bootstrap, the
-    * [[Similarity.writeIvfIndex]] layout), `assigned/batch=N`,
-    * `_committed/N` written LAST — the same exactly-once replay contract
-    * as [[ingestNearDupBatch]].
+    * (k-means-trained on the bootstrap vectors, `cents/` + `meta/`
+    * persisted once at the state root in the [[Similarity.writeIvfIndex]]
+    * layout), and every later batch runs the q87 contract — assign ONLY
+    * the batch's vectors against the stored broadcast centroids
+    * ([[Similarity.ivfAssign]]) and persist its `assigned` rows.
+    * Centroids never move per ingest (production retrains on a cadence
+    * as a separate build job), so the accumulated assignment is
+    * differentially ≡ a batch-mode [[Similarity.ivfAppend]] chain over
+    * the same cuts — tested micro-batch by micro-batch, across restarts.
     */
   def ingestIvf(emb: DataFrame, stateDir: String,
-      checkpointDir: String, iters: Int = 2): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestIvfBatch(batch.toDF(), stateDir, batchId, iters)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    start(emb, checkpointDir)(ingestIvfBatch(_, stateDir, _))
 
   /** One embedding-ingest step (see [[ingestIvf]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
     */
-  def ingestIvfBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      iters: Int = 2): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    ingestIvfIndex(spark, stateDir) match {
-      case None => // bootstrap: THIS batch is the index build job
-        val idx = Similarity.ivfTrainedIndex(batch, iters = iters)
-        idx.cents.write.mode("overwrite").parquet(s"$stateDir/cents")
-        spark.range(1).select(lit(idx.stride).as("stride"))
-          .write.mode("overwrite").parquet(s"$stateDir/meta")
-        idx.assigned.write.mode("overwrite")
-          .parquet(s"$stateDir/assigned/batch=$batchId")
-      case Some(idx) => // steady state: one batch-sized scan, q87's law
-        Similarity.ivfAssign(idx, batch).write.mode("overwrite")
-          .parquet(s"$stateDir/assigned/batch=$batchId")
+  def ingestIvfBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId) { v =>
+      val assigned = v.ifAny(ivfIndex) match {
+        case None => // bootstrap: THIS batch is the index build job
+          val idx = Similarity.ivfTrainedIndex(batch)
+          save(idx.cents, s"$stateDir/cents")
+          save(v.spark.range(1).select(lit(idx.stride).as("stride")), s"$stateDir/meta")
+          idx.assigned
+        case Some(idx) => Similarity.ivfAssign(idx, batch) // one batch-sized scan, q87's law
+      }
+      Seq("assigned" -> assigned)
     }
-    markCommitted(spark, stateDir, batchId)
-  }
 
   /** The accumulated streamed index over all COMMITTED batches (None
     * before bootstrap commits) — directly [[Similarity.ivfSearch]]-able.
     * After a [[compactIvf]] the base's canonical artifact stands in for
     * the assignment deltas it folded.
     */
-  def ingestIvfIndex(spark: SparkSession, stateDir: String): Option[Similarity.IvfIndex] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      // cents/stride never change after bootstrap; read them from the
-      // base when one exists so the base alone is the full artifact
-      val pfx = if (c >= 0) baseDir(stateDir, c) else stateDir
-      Some(Similarity.ivfIndexFrom(
-        spark.read.parquet(s"$pfx/meta").head.getAs[Int]("stride"),
-        spark.read.parquet(s"$pfx/cents"),
-        spark.read.parquet(
-          (if (c >= 0) Seq(s"${baseDir(stateDir, c)}/assigned") else Nil) ++
-            ids.map(i => s"$stateDir/assigned/batch=$i"): _*)))
-    }
+  def ingestIvfIndex(spark: SparkSession, stateDir: String): Option[Similarity.IvfIndex] =
+    view(spark, stateDir).ifAny(ivfIndex)
+
+  private def ivfIndex(v: View): Similarity.IvfIndex = {
+    // cents/stride never change after bootstrap; read them from the base
+    // when one exists so the base alone is the full artifact
+    val pfx = if (v.c >= 0) v.base else v.dir
+    Similarity.ivfIndexFrom(
+      v.spark.read.parquet(s"$pfx/meta").head.getAs[Int]("stride"),
+      v.spark.read.parquet(s"$pfx/cents"), v.frame("assigned"))
   }
 
-  /** Fold every committed IVF assignment delta (and any prior base) into
-    * a fresh canonical base: `base/compact=C` in the
-    * [[Similarity.writeIvfIndex]] layout — cents + summed assignment +
-    * stride manifest, loadable by [[Similarity.loadIvfIndex]] as a
-    * standalone artifact. Same commit/GC protocol as [[compactNearDup]]
-    * (`_compacted/C` marker written last; covered `assigned/batch=N`
-    * dirs and the previous base deleted when `gc`). The bootstrap
-    * `cents`/`meta` at the state root are kept — they are the build
-    * job's artifact and stay byte-identical to the base's copy.
+  /** Fold the committed IVF assignment deltas (and any prior base) into a
+    * base in the [[Similarity.writeIvfIndex]] layout — cents + summed
+    * assignment + stride manifest, loadable by [[Similarity.loadIvfIndex]]
+    * as a standalone artifact. The bootstrap `cents`/`meta` at the state
+    * root are kept: they are the build job's artifact and stay
+    * byte-identical to the base's copy.
     */
-  def compactIvf(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      Similarity.writeIvfIndex(
-        ingestIvfIndex(spark, stateDir).get, baseDir(stateDir, c))
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("assigned"))
-      Some(c)
-    }
-  }
+  def compactIvf(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("assigned"))(
+      (v, out) => Similarity.writeIvfIndex(ivfIndex(v), out))
 
   /** Streaming inverted-index ingest — the [[ingestNearDup]] shape on
     * the retrieval tier: each micro-batch of documents tokenizes ONLY
-    * its own docs into postings/doclens frames and appends them to the
-    * accumulated stored index (the [[graft.operators.TextIndex]] layout,
-    * batch-partitioned). Because ingested doc_ids are append-only,
-    * batch posting frames are (word, doc_id)-disjoint and the
-    * accumulated index is exactly the from-scratch build — BM25 over
-    * the streamed index ≡ [[graft.operators.TextIndex.bm25Rank]] over
-    * everything ingested so far, differentially tested across restarts.
-    *
-    * Artifacts under `stateDir`: `postings/batch=N`, `doclens/batch=N`,
-    * `stats/batch=N` (that batch's doc/token counts — the reader SUMS
-    * them, so stats stay mergeable), `_committed/N` written LAST — the
-    * same exactly-once replay contract as [[ingestNearDupBatch]].
+    * its own docs into `postings`/`doclens` frames in the
+    * [[graft.operators.TextIndex]] layout, plus a `stats` frame of that
+    * batch's doc/token counts (the reader SUMS them, so stats stay
+    * mergeable). Because ingested doc_ids are append-only, batch posting
+    * frames are (word, doc_id)-disjoint and the accumulated index is
+    * exactly the from-scratch build — BM25 over the streamed index ≡
+    * [[graft.operators.TextIndex.bm25Rank]] over everything ingested so
+    * far, differentially tested across restarts.
     */
   def ingestTextIndex(docs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestTextIndexBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    start(docs, checkpointDir)(ingestTextIndexBatch(_, stateDir, _))
 
   /** One text-index ingest step (see [[ingestTextIndex]]); public for
     * batch-mode replays and tests — the streaming query calls exactly
     * this.
     */
-  def ingestTextIndexBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val idx = TextIndex.build(batch)
-    idx.postings.repartition(col("word")).write.mode("overwrite")
-      .parquet(s"$stateDir/postings/batch=$batchId")
-    idx.doclens.write.mode("overwrite")
-      .parquet(s"$stateDir/doclens/batch=$batchId")
-    spark.range(1)
-      .select(lit(idx.nDocs).as("n_docs"),
-        lit(idx.totalTokens).as("total_tokens"))
-      .write.mode("overwrite").parquet(s"$stateDir/stats/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestTextIndexBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId) { v =>
+      val idx = TextIndex.build(batch)
+      Seq("postings" -> idx.postings.repartition(col("word")), "doclens" -> idx.doclens,
+        "stats" -> v.spark.range(1).select(
+          lit(idx.nDocs).as("n_docs"), lit(idx.totalTokens).as("total_tokens")))
+    }
 
   /** The accumulated streamed inverted index over all COMMITTED batches
     * (None before the first commit) — directly
     * [[graft.operators.TextIndex.bm25]]/`lookup`-servable.
     */
   def ingestTextIndexRead(spark: SparkSession,
-      stateDir: String): Option[TextIndex.Index] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      // the base's stats manifest is the already-summed fold of the
-      // batches it covers — summing it WITH the delta manifests keeps
-      // stats mergeable across compactions
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c)) else Nil
-      val s = spark.read
-        .parquet(basePfx.map(_ + "/stats") ++
-          ids.map(i => s"$stateDir/stats/batch=$i"): _*)
-        .agg(sum("n_docs"), sum("total_tokens")).head
-      Some(TextIndex.Index(
-        spark.read.parquet(basePfx.map(_ + "/postings") ++
-          ids.map(i => s"$stateDir/postings/batch=$i"): _*),
-        spark.read.parquet(basePfx.map(_ + "/doclens") ++
-          ids.map(i => s"$stateDir/doclens/batch=$i"): _*),
-        s.getLong(0), s.getLong(1)))
-    }
+      stateDir: String): Option[TextIndex.Index] =
+    view(spark, stateDir).ifAny(textIndex)
+
+  private def textIndex(v: View): TextIndex.Index = {
+    // the base's stats manifest is the already-summed fold of the batches
+    // it covers — summing it WITH the delta manifests keeps stats
+    // mergeable across compactions
+    val s = v.frame("stats").agg(sum("n_docs"), sum("total_tokens")).head
+    TextIndex.Index(v.frame("postings"), v.frame("doclens"), s.getLong(0), s.getLong(1))
   }
 
-  /** Fold every committed text-index ingest batch (and any prior base)
-    * into a fresh canonical base: `base/compact=C` in the
-    * [[TextIndex.compact]] layout — word-repartitioned postings,
-    * doclens, summed stats manifest, loadable by [[TextIndex.load]] as
-    * a standalone artifact. Same commit/GC protocol as
-    * [[compactNearDup]]. This is the cadence job that keeps BM25 probe
-    * cost flat: without it a term probe touches one posting file group
-    * PER BATCH forever.
+  /** Fold the committed text-index batches (and any prior base) into a
+    * base in the [[TextIndex.compact]] layout — word-repartitioned
+    * postings, doclens, summed stats manifest, loadable by
+    * [[TextIndex.load]] as a standalone artifact. This is the cadence job
+    * that keeps BM25 probe cost flat: without it a term probe touches one
+    * posting file group PER BATCH forever.
     */
-  def compactTextIndex(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      TextIndex.compact(
-        ingestTextIndexRead(spark, stateDir).get, baseDir(stateDir, c))
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids,
-        Seq("postings", "doclens", "stats"))
-      Some(c)
-    }
-  }
+  def compactTextIndex(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("postings", "doclens", "stats"))(
+      (v, out) => TextIndex.compact(textIndex(v), out))
 
-  /** Streaming ingest Bloom — the FOURTH `foreachBatch` composition:
-    * the membership front door ([[Sketches.bloomMembership]]) built
-    * incrementally. Per batch the arriving docs' occupied-bucket set
-    * (distinct, ≤ m rows) lands under `bits/batch=N` with the (k, m)
-    * meta written at bootstrap; the same marker-last commit protocol
-    * as the other three tiers. Bloom state is a pure SET UNION — bits
-    * only ever turn on — so the fold over committed batches is
-    * associative, replay-safe, and order-independent: the streamed
-    * filter is bit-identical to a batch [[Sketches.bloomBuild]] over
-    * the union of the batches (the StreamingSpec differential).
+  /** Streaming ingest Bloom: the membership front door
+    * ([[Sketches.bloomMembership]]) built incrementally. Per batch the
+    * arriving docs' occupied-bucket set (distinct, ≤ m rows) lands in the
+    * `bits` frame, with the (k, m) `meta` pinned at the state root. Bloom
+    * state is a pure SET UNION — bits only ever turn on — so the fold over
+    * committed batches is associative, replay-safe, and
+    * order-independent: the streamed filter is bit-identical to a batch
+    * [[Sketches.bloomBuild]] over the union of the batches (the
+    * StreamingSpec differential).
     */
   def ingestBloom(docs: DataFrame, stateDir: String, checkpointDir: String,
       k: Int = 4, m: Int = 131072): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBloomBatch(batch.toDF(), stateDir, batchId, k, m)
-      }
-      .start()
+    start(docs, checkpointDir)(ingestBloomBatch(_, stateDir, _, k, m))
 
   /** One Bloom ingest step (see [[ingestBloom]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
     */
   def ingestBloomBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      k: Int = 4, m: Int = 131072): Unit = {
-    val spark = batch.sparkSession
-    val prior = committedBatches(spark, stateDir)
-    if (prior.contains(batchId)) return // replayed
-    // (k, m) drift gate: bucket sets hashed under different moduli must
-    // never be unioned — a mixed filter can yield FALSE NEGATIVES, the
-    // one failure a Bloom filter's contract forbids. On any non-first
-    // batch the pinned meta is authoritative; fail loudly on mismatch
-    // (the profile tier gates the same drift class via pp_version).
-    if (prior.nonEmpty || compactedUpTo(spark, stateDir) >= 0) {
-      val meta = spark.read.parquet(s"$stateDir/meta").head
-      val (k0, m0) = (meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt)
-      require(k0 == k && m0 == m,
-        s"Bloom ingest (k=$k, m=$m) conflicts with the pinned state " +
-          s"(k=$k0, m=$m0) at $stateDir — mixed-modulus bucket unions " +
-          "break the no-false-negatives contract")
+      k: Int = 4, m: Int = 131072): Unit =
+    commit(batch, stateDir, batchId) { v =>
+      // (k, m) drift gate: bucket sets hashed under different moduli must
+      // never be unioned — a mixed filter can yield FALSE NEGATIVES, the
+      // one failure a Bloom filter's contract forbids. On any non-first
+      // batch the pinned meta is authoritative; fail loudly on mismatch
+      // (the profile tier gates the same drift class via pp_version).
+      if (!v.isEmpty) {
+        val (k0, m0) = bloomMeta(v)
+        require(k0 == k && m0 == m,
+          s"Bloom ingest (k=$k, m=$m) conflicts with the pinned state " +
+            s"(k=$k0, m=$m0) at $stateDir — mixed-modulus bucket unions " +
+            "break the no-false-negatives contract")
+      }
+      // (k, m) pin: every batch writes the same one-row frame (the
+      // foreachBatch loop is serial, and identical content makes the
+      // overwrite idempotent under replay)
+      save(bloomMetaFrame(v.spark, k, m), s"$stateDir/meta")
+      Seq("bits" -> Sketches.bloomBuild(batch, k, m))
     }
-    Sketches.bloomBuild(batch, k, m).write.mode("overwrite")
-      .parquet(s"$stateDir/bits/batch=$batchId")
-    // (k, m) pin: every batch writes the same one-row frame (the
-    // foreachBatch loop is serial, and identical content makes the
-    // overwrite idempotent under replay)
-    spark.range(1)
-      .select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
-      .write.mode("overwrite").parquet(s"$stateDir/meta")
-    markCommitted(spark, stateDir, batchId)
+
+  private def bloomMeta(v: View): (Int, Int) = {
+    val meta = v.spark.read.parquet(s"${v.dir}/meta").head
+    (meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt)
   }
+
+  private def bloomMetaFrame(spark: SparkSession, k: Int, m: Int): DataFrame =
+    spark.range(1).select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
 
   /** The accumulated streamed filter over all COMMITTED batches (and
     * any compacted base): the distinct union of their occupied-bucket
     * sets, with the pinned (k, m). None before the first commit.
     */
   def ingestBloomRead(spark: SparkSession,
-      stateDir: String): Option[(DataFrame, Int, Int)] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val meta = spark.read.parquet(s"$stateDir/meta").head
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/bits") else Nil
-      Some((
-        spark.read.parquet(
-          basePfx ++ ids.map(i => s"$stateDir/bits/batch=$i"): _*).distinct(),
-        meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt))
+      stateDir: String): Option[(DataFrame, Int, Int)] =
+    view(spark, stateDir).ifAny { v =>
+      val (k, m) = bloomMeta(v)
+      (v.frame("bits").distinct(), k, m)
     }
-  }
 
   /** Probe the streamed filter — verdict-only rows, the ingest
     * front-door shape ([[Sketches.bloomProbe]] over the accumulated
@@ -553,147 +506,99 @@ object Streams {
       Sketches.bloomProbe(occ, probes, k, m)
     }
 
-  /** Fold every committed Bloom batch (and any prior base) into a
-    * fresh canonical base: `base/compact=C` in the [[Sketches.writeBloom]]
-    * layout (`bits/` + `meta/`), loadable by
-    * [[Sketches.bloomMembershipStored]] as a standalone artifact. Same
-    * commit/GC protocol as the other tiers. Keeps probe cost flat: an
-    * uncompacted probe unions one bucket-set file group per batch
-    * forever.
+  /** Fold the committed Bloom batches (and any prior base) into a base
+    * in the [[Sketches.writeBloom]] layout (`bits/` + `meta/`), loadable
+    * by [[Sketches.bloomMembershipStored]] as a standalone artifact. Keeps
+    * probe cost flat: an uncompacted probe unions one bucket-set file
+    * group per batch forever.
     */
-  def compactBloom(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val (occ, k, m) = ingestBloomRead(spark, stateDir).get
-      occ.write.mode("overwrite").parquet(baseDir(stateDir, c) + "/bits")
-      spark.range(1)
-        .select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/meta")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("bits"))
-      Some(c)
+  def compactBloom(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("bits")) { (v, out) =>
+      val (k, m) = bloomMeta(v)
+      save(v.frame("bits").distinct(), s"$out/bits")
+      save(bloomMetaFrame(spark, k, m), s"$out/meta")
     }
-  }
 
-  /** Streaming data-quality profile — the sixth `foreachBatch` ingest
-    * composition: each micro-batch writes its MERGEABLE per-column
-    * profile partial ([[graft.operators.Profile.profilePartial]]:
-    * counts + portable min/max + a KMV distinct sketch) under
-    * `profile/batch=N`, commit marker last (the shared exactly-once
-    * protocol). [[ingestProfileRead]] folds every committed partial —
-    * and because the KMV merge is lossless at the sketch level, the
-    * streamed profile is IDENTICAL to a single-pass profile of all
-    * data ingested so far, whatever the batching (the differential
-    * law StreamingSpec pins). No compaction cadence needed: a partial
-    * is O(columns) rows, so a year of micro-batches reads in
-    * milliseconds.
+  /** Streaming data-quality profile: each micro-batch writes its
+    * MERGEABLE per-column profile partial
+    * ([[graft.operators.Profile.profilePartial]]: counts + portable
+    * min/max + a KMV distinct sketch) as its `profile` frame.
+    * [[ingestProfileRead]] folds every committed partial — and because
+    * the KMV merge is lossless at the sketch level, the streamed profile
+    * is IDENTICAL to a single-pass profile of all data ingested so far,
+    * whatever the batching (the differential law StreamingSpec pins). No
+    * compaction cadence needed: a partial is O(columns) rows, so a year of
+    * micro-batches reads in milliseconds.
     */
   def ingestProfile(rows: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestProfileBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    start(rows, checkpointDir)(ingestProfileBatch(_, stateDir, _))
 
   /** One profile ingest step (see [[ingestProfile]]); public for
     * batch-mode replays and tests.
     */
-  def ingestProfileBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Profile.profilePartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/profile/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestProfileBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId)(_ => Seq("profile" -> Profile.profilePartial(batch)))
 
   /** The accumulated profile over all COMMITTED batches (None before
     * the first commit): (column_name, n_rows, n_nulls, n_distinct_est,
     * min_str, max_str).
     */
   def ingestProfileRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val ids = committedBatches(spark, stateDir).sorted
-    if (ids.isEmpty) None
-    else {
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny { v =>
       // mergeSchema + an explicit version gate: a state dir written by
       // an older partial format must FAIL here, not silently mis-merge
       // (v1 rendered integral extrema as strings — coalescing them
       // under the v2 schema would discard them)
       val partials = spark.read.option("mergeSchema", "true")
-        .parquet(ids.map(i => s"$stateDir/profile/batch=$i"): _*)
+        .parquet(v.paths("profile", "profile"): _*)
       val ok = partials.columns.contains("pp_version") && {
         // coalesce BEFORE min: rows from a version-less partial read
         // under the merged schema carry NULL, which a bare min() would
         // skip right past
-        val r = partials.agg(org.apache.spark.sql.functions.min(
-          coalesce(col("pp_version"), lit(-1L)))).head
-        !r.isNullAt(0) &&
-          r.getLong(0) == graft.operators.Profile.ProfilePartialVersion
+        val r = partials.agg(min(coalesce(col("pp_version"), lit(-1L)))).head
+        !r.isNullAt(0) && r.getLong(0) == Profile.ProfilePartialVersion
       }
       if (!ok) throw new IllegalStateException(
         s"profile state under $stateDir carries partials from an older " +
           "format version — re-ingest (mixed-version folds would " +
           "silently mis-merge integral extrema)")
-      Some(graft.operators.Profile.mergeProfile(partials))
+      Profile.mergeProfile(partials)
     }
-  }
 
-  /** Streaming value histogram — the SEVENTH `foreachBatch` ingest
-    * composition: each micro-batch writes its (grp, cents, c)
-    * histogram partial ([[graft.operators.Profile.valueHist]] — a pure
-    * mergeable: partials from disjoint batches fold by summing `c`,
-    * so the fold is associative, replay-safe, and order-independent).
-    * The folded histogram feeds the robust median/MAD outlier audit
-    * ([[Profile.robustOutliersFromHist]]) — streamed ≡ the one-shot
-    * batch [[Profile.robustOutliers]] over the union of the batches,
-    * at hash level (the StreamingSpec differential). Same marker-last
-    * commit protocol and [[compactValueHist]] cadence job as the
-    * other tiers; state is bounded by groups × value grid, never rows.
+  /** Streaming value histogram: each micro-batch writes its (grp, cents,
+    * c) histogram partial ([[graft.operators.Profile.valueHist]] — a pure
+    * mergeable: partials from disjoint batches fold by summing `c`, so
+    * the fold is associative, replay-safe, and order-independent). The
+    * folded histogram feeds the robust median/MAD outlier audit
+    * ([[Profile.robustOutliersFromHist]]) — streamed ≡ the one-shot batch
+    * [[Profile.robustOutliers]] over the union of the batches, at hash
+    * level (the StreamingSpec differential). State is bounded by groups ×
+    * value grid, never rows.
     */
   def ingestValueHist(rows: DataFrame, stateDir: String, checkpointDir: String,
       groupCol: String, valueCol: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestValueHistBatch(batch.toDF(), stateDir, batchId, groupCol, valueCol)
-      }
-      .start()
+    start(rows, checkpointDir)(ingestValueHistBatch(_, stateDir, _, groupCol, valueCol))
 
   /** One histogram ingest step (see [[ingestValueHist]]); public for
     * batch-mode replays and tests.
     */
   def ingestValueHistBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      groupCol: String, valueCol: String): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Profile.valueHist(batch, groupCol, valueCol)
-      .write.mode("overwrite").parquet(s"$stateDir/hist/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      groupCol: String, valueCol: String): Unit =
+    commit(batch, stateDir, batchId)(
+      _ => Seq("hist" -> Profile.valueHist(batch, groupCol, valueCol)))
 
   /** The folded histogram over all COMMITTED batches (and any compacted
     * base): one row per (grp, cents) with the summed count. None before
     * the first commit.
     */
   def ingestValueHistRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/hist") else Nil
-      Some(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/hist/batch=$i"): _*)
-        .groupBy("grp", "cents").agg(sum("c").as("c")))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(v => mergeHist(v.frame("hist")))
+
+  private def mergeHist(hist: DataFrame): DataFrame =
+    hist.groupBy("grp", "cents").agg(sum("c").as("c"))
 
   /** The robust outlier audit over the streamed state — the ingest-side
     * face of q138. None before the first commit.
@@ -701,102 +606,53 @@ object Streams {
   def ingestRobustOutliers(spark: SparkSession, stateDir: String,
       kNum: Long = 3L, kDen: Long = 1L): Option[DataFrame] =
     ingestValueHistRead(spark, stateDir)
-      .map(graft.operators.Profile.robustOutliersFromHist(_, kNum, kDen))
+      .map(Profile.robustOutliersFromHist(_, kNum, kDen))
 
-  /** Fold every committed histogram batch (and any prior base) into a
-    * fresh canonical base — same commit/GC protocol as [[compactBloom]];
-    * keeps read cost flat as batch count grows.
+  /** Fold the committed histogram batches (and any prior base) into one
+    * base; keeps read cost flat as batch count grows.
     */
-  def compactValueHist(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestValueHistRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/hist")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("hist"))
-      Some(c)
-    }
-  }
+  def compactValueHist(spark: SparkSession, stateDir: String): Option[Long] =
+    compactMerged(spark, stateDir, "hist")(mergeHist)
 
-  /** Streaming per-label embedding-centroid state — the TENTH
-    * `foreachBatch` ingest composition: each micro-batch of embedding
-    * rows writes its per-label quantized component-sum partial
-    * ([[graft.operators.Similarity.centroidPartial]] — a pure
-    * mergeable: integer sums fold with NO precision loss, so the
-    * streamed centroid is bit-identical to a one-shot scan whatever
-    * the batching). The read face finishes the folded sums through the
-    * SAME divide-back the batch queries use (q170/q206 arithmetic), so
-    * a production drift monitor can compare live-ingested centroids
-    * against a stored snapshot without ever rescanning the corpus.
-    * Marker-last commit + [[compactCentroids]] cadence, the shared
-    * protocol; state is labels × dim longs, never rows.
+  /** Streaming per-label embedding-centroid state: each micro-batch of
+    * embedding rows writes its per-label quantized component-sum partial
+    * ([[graft.operators.Similarity.centroidPartial]] — a pure mergeable:
+    * integer sums fold with NO precision loss, so the streamed centroid
+    * is bit-identical to a one-shot scan whatever the batching). The read
+    * face finishes the folded sums through the SAME divide-back the batch
+    * queries use (q170/q206 arithmetic), so a production drift monitor
+    * can compare live-ingested centroids against a stored snapshot
+    * without ever rescanning the corpus. State is labels × dim longs,
+    * never rows.
     */
   def ingestCentroids(emb: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestCentroidsBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    start(emb, checkpointDir)(ingestCentroidsBatch(_, stateDir, _))
 
   /** One centroid ingest step (see [[ingestCentroids]]); public for
     * batch-mode replays and tests.
     */
-  def ingestCentroidsBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Similarity.centroidPartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/cent/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestCentroidsBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId)(_ => Seq("cent" -> Similarity.centroidPartial(batch)))
 
   /** The finished per-label centroids over all COMMITTED batches (and
     * any compacted base): (label, cnt, ce). None before the first
     * commit.
     */
   def ingestCentroidsRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/cent") else Nil
-      Some(graft.operators.Similarity.finishCentroids(
-        graft.operators.Similarity.mergeCentroidPartials(spark.read
-          .parquet(basePfx ++ ids.map(i => s"$stateDir/cent/batch=$i"): _*))))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(v => Similarity.finishCentroids(
+      Similarity.mergeCentroidPartials(v.frame("cent"))))
 
-  /** Fold the committed centroid partials into one base (the shared
-    * compact/GC protocol) — merged SUMS are stored, not finished
-    * centroids, so later deltas keep folding losslessly.
+  /** Fold the committed centroid partials into one base — merged SUMS are
+    * stored, not finished centroids, so later deltas keep folding
+    * losslessly.
     */
-  def compactCentroids(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val basePfx = if (c0 >= 0) Seq(baseDir(stateDir, c0) + "/cent") else Nil
-      graft.operators.Similarity.mergeCentroidPartials(spark.read
-          .parquet(basePfx ++ ids.map(i => s"$stateDir/cent/batch=$i"): _*))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/cent")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("cent"))
-      Some(c)
-    }
-  }
+  def compactCentroids(spark: SparkSession, stateDir: String): Option[Long] =
+    compactMerged(spark, stateDir, "cent")(Similarity.mergeCentroidPartials)
 
-  /** Streaming training-token budget — the ELEVENTH `foreachBatch`
-    * ingest composition: each micro-batch of documents writes its
-    * per-(source, split) doc/token partial
+  /** Streaming training-token budget: each micro-batch of documents
+    * writes its per-(source, split) doc/token partial
     * ([[graft.operators.Prep.budgetPartial]] — split assignment is the
     * q56 hash bucket and the count is the q39 whitespace counter, both
     * PER-DOC deterministic, so the partial is a pure integer mergeable
@@ -808,427 +664,219 @@ object Streams {
     * curation/semantic include flags are corpus-GLOBAL — a doc's
     * near-dup status can flip as later docs arrive — so the streamed
     * budget is the pre-chain mass; the stored manifest stays the
-    * post-chain authority.) Marker-last commit + [[compactBudget]]
-    * cadence; state is sources × splits rows per batch.
+    * post-chain authority.) State is sources × splits rows per batch.
     */
   def ingestBudget(docs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBudgetBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    start(docs, checkpointDir)(ingestBudgetBatch(_, stateDir, _))
 
   /** One budget ingest step (see [[ingestBudget]]); public for
     * batch-mode replays and tests.
     */
-  def ingestBudgetBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Prep.budgetPartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/budget/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestBudgetBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId)(_ => Seq("budget" -> Prep.budgetPartial(batch)))
 
   /** The folded (source, split, n_docs, ws_tokens) budget over all
     * COMMITTED batches (and any compacted base). None before the first
     * commit.
     */
   def ingestBudgetRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/budget") else Nil
-      Some(graft.operators.Prep.mergeBudgetPartials(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/budget/batch=$i"): _*)))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(v => Prep.mergeBudgetPartials(v.frame("budget")))
 
-  /** Fold the committed budget partials into one base (the shared
-    * compact/GC protocol) — merged integer sums, so later deltas keep
-    * folding losslessly.
+  /** Fold the committed budget partials into one base — merged integer
+    * sums, so later deltas keep folding losslessly.
     */
-  def compactBudget(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestBudgetRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/budget")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("budget"))
-      Some(c)
-    }
-  }
+  def compactBudget(spark: SparkSession, stateDir: String): Option[Long] =
+    compactMerged(spark, stateDir, "budget")(Prep.mergeBudgetPartials)
 
-  /** Streaming Markov transition matrix — the EIGHTH `foreachBatch`
-    * ingest composition, and the first ORDER-SENSITIVE one: transition
-    * counts are NOT a pure mergeable (the pair spanning two batches
-    * belongs to neither batch alone), so each micro-batch carries a
-    * per-user FRONTIER — the last (ts, event_id, type) seen per user —
+  /** Streaming Markov transition matrix, the ORDER-SENSITIVE tier:
+    * transition counts are NOT a pure mergeable (the pair spanning two
+    * batches belongs to neither batch alone), so each micro-batch carries
+    * a per-user `frontier` — the last (ts, event_id, type) seen per user —
     * and counts its within-batch pairs PLUS the frontier→first-event
-    * boundary pair, writing a summable (from_type, to_type, n) partial.
-    * Folded counts + the shared normalization tail
-    * ([[graft.operators.Sessions.normalizeTransitions]]) ≡ the one-shot
-    * batch [[graft.operators.Sessions.transitionMatrix]] over the
-    * concatenated stream, at hash level (the StreamingSpec
+    * boundary pair, writing a summable (from_type, to_type, n) `trans`
+    * partial (30-minute session gap). Folded counts + the shared
+    * normalization tail ([[graft.operators.Sessions.normalizeTransitions]])
+    * ≡ the one-shot batch [[graft.operators.Sessions.transitionMatrix]]
+    * over the concatenated stream, at hash level (the StreamingSpec
     * differential).
     *
     * Contract: per-user event-time monotone ingest (append order — a
     * log). A batch event at-or-before its user's stored frontier would
     * silently mis-pair, so the batch step FAILS LOUDLY on the first
     * violation instead (the Bloom-meta / profile-version posture:
-    * detectable drift never folds quietly). Same marker-last commit,
-    * replay-skip, and [[compactTransitions]] cadence as the other
-    * tiers; state is the (from, to) count grid plus one frontier row
-    * per user.
+    * detectable drift never folds quietly). State is the (from, to) count
+    * grid plus one frontier row per user.
     */
   def ingestTransitions(events: DataFrame, stateDir: String,
-      checkpointDir: String, gapSeconds: Long = 1800L): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestTransitionsBatch(batch.toDF(), stateDir, batchId, gapSeconds)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    start(events, checkpointDir)(ingestTransitionsBatch(_, stateDir, _))
 
   /** One transition ingest step (see [[ingestTransitions]]); public for
     * batch-mode replays and tests.
     */
-  def ingestTransitionsBatch(batch: DataFrame, stateDir: String,
-      batchId: Long, gapSeconds: Long = 1800L): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val ev = batch.select(col("user_id"), col("ts"), col("event_id"),
-      col("event_type"))
-    val all = latestTransitionFrontier(spark, stateDir) match {
-      case None => ev
-      case Some(f) =>
-        val firsts = ev.groupBy("user_id")
-          .agg(min(struct(unix_micros(col("ts")).as("ts_us"),
-            col("event_id").as("event_id"))).as("first"))
-        val viol = firsts
-          .join(f.select(col("user_id"),
-            struct(col("ts_us"), col("event_id")).as("last")), "user_id")
-          .filter(!(col("first") > col("last")))
-        val bad = viol.limit(1).collect()
-        if (bad.nonEmpty) throw new IllegalStateException(
-          s"ingestTransitions: batch $batchId carries an event at-or-" +
-            s"before the stored frontier for user ${bad.head.get(0)} — " +
-            "out-of-order ingest would silently mis-pair transitions; " +
-            "this tier requires per-user event-time monotone batches")
-        ev.unionByName(f.select(col("user_id"),
-          expr("timestamp_micros(ts_us)").as("ts"), col("event_id"),
-          col("event_type")))
+  def ingestTransitionsBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId) { v =>
+      val ev = batch.select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"))
+      val all = frontier(v) match {
+        case None => ev
+        case Some(f) =>
+          val firsts = ev.groupBy("user_id")
+            .agg(min(struct(unix_micros(col("ts")).as("ts_us"),
+              col("event_id").as("event_id"))).as("first"))
+          val viol = firsts
+            .join(f.select(col("user_id"),
+              struct(col("ts_us"), col("event_id")).as("last")), "user_id")
+            .filter(!(col("first") > col("last")))
+          val bad = viol.limit(1).collect()
+          if (bad.nonEmpty) throw new IllegalStateException(
+            s"ingestTransitions: batch $batchId carries an event at-or-" +
+              s"before the stored frontier for user ${bad.head.get(0)} — " +
+              "out-of-order ingest would silently mis-pair transitions; " +
+              "this tier requires per-user event-time monotone batches")
+          ev.unionByName(f.select(col("user_id"),
+            expr("timestamp_micros(ts_us)").as("ts"), col("event_id"),
+            col("event_type")))
+      }
+      Seq("trans" -> Sessions.transitionCounts(all),
+        "frontier" -> all.groupBy("user_id")
+          .agg(max(struct(unix_micros(col("ts")).as("ts_us"),
+            col("event_id").as("event_id"),
+            col("event_type").as("event_type"))).as("m"))
+          .select(col("user_id"), col("m.ts_us").as("ts_us"),
+            col("m.event_id").as("event_id"),
+            col("m.event_type").as("event_type")))
     }
-    graft.operators.Sessions.transitionCounts(all, gapSeconds)
-      .write.mode("overwrite").parquet(s"$stateDir/trans/batch=$batchId")
-    all.groupBy("user_id")
-      .agg(max(struct(unix_micros(col("ts")).as("ts_us"),
-        col("event_id").as("event_id"),
-        col("event_type").as("event_type"))).as("m"))
-      .select(col("user_id"), col("m.ts_us").as("ts_us"),
-        col("m.event_id").as("event_id"),
-        col("m.event_type").as("event_type"))
-      .write.mode("overwrite").parquet(s"$stateDir/frontier/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
 
-  /** The newest committed frontier snapshot (one row per user), from
-    * the highest delta batch or, failing that, the compacted base.
+  /** The newest frontier snapshot of the view (one row per user): the
+    * highest delta batch's or, failing that, the base's.
     */
-  private def latestTransitionFrontier(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (ids.nonEmpty)
-      Some(spark.read.parquet(s"$stateDir/frontier/batch=${ids.max}"))
-    else if (c >= 0)
-      Some(spark.read.parquet(baseDir(stateDir, c) + "/frontier"))
-    else None
-  }
+  private def frontier(v: View): Option[DataFrame] =
+    v.paths("frontier", "frontier").lastOption.map(v.spark.read.parquet(_))
+
+  private def sumTransitions(trans: DataFrame): DataFrame =
+    trans.groupBy("from_type", "to_type").agg(sum("n").as("n"))
 
   /** The row-normalized transition matrix over all committed batches
     * (and any compacted base) — the ingest-side face of q151. None
     * before the first commit.
     */
   def ingestTransitionsRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/trans") else Nil
-      Some(graft.operators.Sessions.normalizeTransitions(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/trans/batch=$i"): _*)
-        .groupBy("from_type", "to_type").agg(sum("n").as("n"))))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(v =>
+      Sessions.normalizeTransitions(sumTransitions(v.frame("trans"))))
 
-  /** Fold every committed transition partial (and any prior base) into
-    * a fresh canonical base, carrying the newest frontier forward —
-    * same commit/GC protocol as [[compactValueHist]]; keeps read cost
-    * flat as batch count grows.
+  /** Fold the committed transition partials (and any prior base) into one
+    * base, carrying the newest frontier forward; keeps read cost flat as
+    * batch count grows.
     */
-  def compactTransitions(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val basePfx = if (c0 >= 0) Seq(baseDir(stateDir, c0) + "/trans") else Nil
-      spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/trans/batch=$i"): _*)
-        .groupBy("from_type", "to_type").agg(sum("n").as("n"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/trans")
-      latestTransitionFrontier(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/frontier")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("trans", "frontier"))
-      Some(c)
+  def compactTransitions(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("trans", "frontier")) { (v, out) =>
+      save(sumTransitions(v.frame("trans")), s"$out/trans")
+      save(frontier(v).get, s"$out/frontier")
     }
-  }
 
-  /** Streaming survival analysis — the NINTH `foreachBatch` ingest
-    * composition: the Nelson–Aalen repurchase hazard (batch face q165,
-    * [[graft.operators.Sessions.repurchaseHazard]]) over an event
-    * stream. Unlike the order-sensitive transitions tier, this state IS
-    * a pure mergeable: the study needs only each user's two EARLIEST
-    * purchases plus the corpus' last purchase second, and the global
-    * two-earliest always lie inside the union of per-batch two-earliest
-    * (each batch persists ≤ 2 slim (user_id, event_id, s) rows per user
-    * and a 1-row batch horizon), so the fold is associative,
-    * replay-safe, and order-independent — streamed ≡ batch is a hash
-    * law whatever the batching (the StreamingSpec differential). Same
-    * marker-last commit, replay-skip, and [[compactHazard]] cadence as
-    * the other tiers; compaction re-ranks accumulated candidates back
-    * to ≤ 2 rows per user, so state stays user-bounded however long the
+  /** Streaming survival analysis: the Nelson–Aalen repurchase hazard
+    * (batch face q165, [[graft.operators.Sessions.repurchaseHazard]])
+    * over an event stream. Unlike the order-sensitive transitions tier,
+    * this state IS a pure mergeable: the study needs only each user's two
+    * EARLIEST purchases plus the corpus' last purchase second, and the
+    * global two-earliest always lie inside the union of per-batch
+    * two-earliest (each batch persists ≤ 2 slim (user_id, event_id, s)
+    * `firsts` rows per user and a 1-row `hz` horizon), so the fold is
+    * associative, replay-safe, and order-independent — streamed ≡ batch
+    * is a hash law whatever the batching (the StreamingSpec
+    * differential). Compaction re-ranks accumulated candidates back to
+    * ≤ 2 rows per user, so state stays user-bounded however long the
     * ingest runs.
     */
   def ingestHazard(events: DataFrame, stateDir: String,
-      checkpointDir: String, eventType: String = "purchase"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestHazardBatch(batch.toDF(), stateDir, batchId, eventType)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    start(events, checkpointDir)(ingestHazardBatch(_, stateDir, _))
 
   /** One hazard ingest step (see [[ingestHazard]]); public for
     * batch-mode replays and tests.
     */
-  def ingestHazardBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      eventType: String = "purchase"): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val sec = "((unix_micros(ts) - pmod(unix_micros(ts), 1000000)) div 1000000)"
-    val p = batch.filter(col("event_type") === eventType
-        && col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"), col("event_id"), expr(sec).as("s"))
-    val byUser = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("s"), col("event_id"))
-    p.withColumn("rn", row_number().over(byUser)).filter(col("rn") <= 2)
-      .drop("rn")
-      .write.mode("overwrite").parquet(s"$stateDir/firsts/batch=$batchId")
-    p.agg(max(col("s")).as("tmax"))
-      .write.mode("overwrite").parquet(s"$stateDir/hz/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestHazardBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId) { _ =>
+      val sec = "((unix_micros(ts) - pmod(unix_micros(ts), 1000000)) div 1000000)"
+      val p = batch.filter(col("event_type") === "purchase"
+          && col("user_id").isNotNull && col("ts").isNotNull)
+        .select(col("user_id"), col("event_id"), expr(sec).as("s"))
+      Seq("firsts" -> twoEarliest(p), "hz" -> p.agg(max(col("s")).as("tmax")))
+    }
+
+  /** Each user's two earliest purchase candidates. */
+  private def twoEarliest(p: DataFrame): DataFrame =
+    p.withColumn("rn", row_number().over(
+        Window.partitionBy("user_id").orderBy(col("s"), col("event_id"))))
+      .filter(col("rn") <= 2).drop("rn")
+
+  private def horizon(v: View): DataFrame =
+    v.frame("hz").agg(max(col("tmax")).as("tmax"))
 
   /** The Nelson–Aalen hazard frame over everything ingested (and any
     * compacted base) — hash-identical to batch q165 over the union of
     * the batches. None before the first commit.
     */
   def ingestHazardRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      def frames(f: String) =
-        (if (c >= 0) Seq(baseDir(stateDir, c) + s"/$f") else Nil) ++
-          ids.map(i => s"$stateDir/$f/batch=$i")
-      val firsts = spark.read.parquet(frames("firsts"): _*)
-      val horizon = spark.read.parquet(frames("hz"): _*)
-        .agg(max(col("tmax")).as("tmax"))
-      Some(graft.operators.Sessions.hazardFromPurchases(firsts, horizon))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(v =>
+      Sessions.hazardFromPurchases(v.frame("firsts"), horizon(v)))
 
-  /** Fold every committed hazard batch (and any prior base) into a
-    * fresh canonical base: candidates re-ranked back to ≤ 2 rows per
-    * user, horizons folded to one row — same commit/GC protocol as the
-    * other tiers; keeps BOTH read cost and state size flat as batch
+  /** Fold the committed hazard batches (and any prior base) into one
+    * base: candidates re-ranked back to ≤ 2 rows per user, horizons
+    * folded to one row; keeps BOTH read cost and state size flat as batch
     * count grows.
     */
-  def compactHazard(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      def frames(f: String) =
-        (if (c0 >= 0) Seq(baseDir(stateDir, c0) + s"/$f") else Nil) ++
-          ids.map(i => s"$stateDir/$f/batch=$i")
-      val byUser = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("s"), col("event_id"))
-      spark.read.parquet(frames("firsts"): _*)
-        .withColumn("rn", row_number().over(byUser)).filter(col("rn") <= 2)
-        .drop("rn")
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/firsts")
-      spark.read.parquet(frames("hz"): _*)
-        .agg(max(col("tmax")).as("tmax"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/hz")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("firsts", "hz"))
-      Some(c)
+  def compactHazard(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq("firsts", "hz")) { (v, out) =>
+      save(twoEarliest(v.frame("firsts")), s"$out/firsts")
+      save(horizon(v), s"$out/hz")
     }
-  }
 
-  /** Streaming ingest of IMAGE FEATURES — the TWELFTH `foreachBatch`
-    * composition, joining the multimodal tier to the ingest protocol:
-    * as payload blobs arrive, ONLY the new batch pays the codec pass
-    * ([[graft.operators.Multimodal.extractImageFeatures]] — the q215
-    * per-partition `javax.imageio` decode), and its integer-exact
-    * feature rows land under `features/batch=N` with the same
-    * marker-last exactly-once contract as the other eleven tiers.
-    * Feature rows are pure per-doc derivations of append-only doc_ids,
-    * so batch frames are disjoint and the fold over committed batches
-    * is row-identical to a batch decode over everything ingested — the
-    * StreamingSpec differential, checked across replays and
-    * compaction. At 100 TB this is THE shape for an image corpus: a
-    * crawl never re-decodes yesterday's payloads, and downstream
-    * consumers (dedup on the histogram fingerprint, resize manifests)
-    * read the feature artifact, never the bytes.
+  /** Streaming ingest of IMAGE FEATURES, joining the multimodal tier to
+    * the ingest protocol: as payload blobs arrive, ONLY the new batch pays
+    * the codec pass ([[graft.operators.Multimodal.extractImageFeatures]] —
+    * the q215 per-partition `javax.imageio` decode), and its
+    * integer-exact rows land in the `features` frame. Feature rows are
+    * pure per-doc derivations of append-only doc_ids, so batch frames are
+    * disjoint and the fold over committed batches is row-identical to a
+    * batch decode over everything ingested — the StreamingSpec
+    * differential, checked across replays and compaction. At 100 TB this
+    * is THE shape for an image corpus: a crawl never re-decodes
+    * yesterday's payloads, and downstream consumers (dedup on the
+    * histogram fingerprint, resize manifests) read the feature artifact,
+    * never the bytes.
     */
   def ingestImageFeatures(blobs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    blobs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestImageFeaturesBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    start(blobs, checkpointDir)(ingestImageFeaturesBatch(_, stateDir, _))
 
   /** One image-feature ingest step (see [[ingestImageFeatures]]);
     * public for batch-mode replays and tests. `batch` carries the
     * [[graft.operators.Multimodal.Blob]] schema (doc_id, bytes).
     */
-  def ingestImageFeaturesBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Multimodal
-      .extractImageFeatures(batch.as[graft.operators.Multimodal.Blob](
-        Encoders.product[graft.operators.Multimodal.Blob]))
-      .write.mode("overwrite").parquet(s"$stateDir/features/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+  def ingestImageFeaturesBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit =
+    commit(batch, stateDir, batchId)(_ => Seq("features" -> Multimodal
+      .extractImageFeatures(batch.as[Multimodal.Blob](Encoders.product[Multimodal.Blob]))
+      .toDF()))
 
   /** The accumulated feature table over all COMMITTED batches (None
     * before the first commit): (doc_id, width, height, lum_hist).
     */
   def ingestImageFeaturesRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else Some(spark.read.parquet(
-      (if (c >= 0) Seq(baseDir(stateDir, c) + "/features") else Nil) ++
-        ids.map(i => s"$stateDir/features/batch=$i"): _*))
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir).ifAny(_.frame("features"))
 
   /** Fold committed image-feature batches (and any prior base) into one
-    * canonical base — same commit/GC protocol as [[compactNearDup]];
-    * keeps a feature probe reading one file group instead of one per
-    * batch forever. The fold is a plain disjoint union: no re-decode.
+    * base; keeps a feature probe reading one file group instead of one
+    * per batch forever. The fold is a plain disjoint union: no re-decode.
     */
-  def compactImageFeatures(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestImageFeaturesRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/features")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("features"))
-      Some(c)
-    }
-  }
-
-  private def fileSystem(
-      spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def committedBatches(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = fileSystem(spark, stateDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/_committed")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName.toLong).sorted
-  }
-
-  // ——— compaction protocol, shared by all three ingest tiers ———
-  // `_compacted/C` = every batch id ≤ C is folded into `base/compact=C`
-  // (the tier's canonical standalone artifact layout). Markers in
-  // `_committed` are never deleted — they are the replay-skip contract —
-  // so readers resolve: C = max compacted marker, deltas = committed ids
-  // greater than C.
-
-  private def baseDir(stateDir: String, c: Long): String =
-    s"$stateDir/base/compact=$c"
-
-  /** Newest compaction watermark, or -1 when never compacted. */
-  private def compactedUpTo(spark: SparkSession, stateDir: String): Long = {
-    val fs = fileSystem(spark, stateDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/_compacted")
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName.toLong).foldLeft(-1L)(math.max)
-  }
-
-  /** Committed batches NOT yet covered by the compaction watermark. */
-  private def deltaBatches(spark: SparkSession, stateDir: String,
-      compacted: Long): Seq[Long] =
-    committedBatches(spark, stateDir).filter(_ > compacted)
-
-  /** Write the `_compacted/<c>` marker — LAST, after the base's frames
-    * are all durable (the same marker-last protocol as [[markCommitted]]).
-    */
-  private def markCompacted(spark: SparkSession, stateDir: String,
-      c: Long): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_compacted"))
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_compacted/$c"), true).close()
-  }
-
-  /** Best-effort post-marker GC: delete the batch dirs the new base
-    * covers (under each of `frames`) and the previous base. Runs AFTER
-    * the marker commit, so a crash mid-GC only leaves extra files — the
-    * next compaction's GC sweeps them (ids derive from `_committed`,
-    * which is never pruned).
-    */
-  private def gcCovered(spark: SparkSession, stateDir: String,
-      prevBase: Long, coveredIds: Seq[Long], frames: Seq[String]): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    def rm(p: String): Unit =
-      try fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      catch { case _: Throwable => () }
-    for (f <- frames; i <- coveredIds) rm(s"$stateDir/$f/batch=$i")
-    if (prevBase >= 0) rm(baseDir(stateDir, prevBase))
-  }
+  def compactImageFeatures(spark: SparkSession, stateDir: String): Option[Long] =
+    compactMerged(spark, stateDir, "features")(identity)
 
   /** Typed event row for the stateful API (subset of the events schema). */
   case class UserEvent(user_id: Long, event_type: String, value: Double,

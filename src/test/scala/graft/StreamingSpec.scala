@@ -803,6 +803,33 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
+  test("a batch that commits mid-compaction stays a delta and is counted once") {
+    import graft.operators.Prep
+    val state = java.nio.file.Files
+      .createTempDirectory("graft_compact_race_").toFile.getAbsolutePath
+    val docs = Tables.load(spark, TestSpark.Sf0001, "documents")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("source", "split").collect().toSeq
+    def cut(i: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === i)
+    (0 until 3).foreach(i => Streams.ingestBudgetBatch(cut(i), state, i.toLong))
+    // the fold runs after the compaction listed its view: batch 3 commits
+    // in between, as a live ingest would
+    val c = Streams.compact(spark, state, Seq("budget")) { (v, out) =>
+      Streams.ingestBudgetBatch(cut(3), state, 3L)
+      Streams.foldMerged("budget", Prep.mergeBudgetPartials)(v, out)
+    }
+    assert(c == Some(2L), "the compaction covers only the batches it listed")
+    assert(new java.io.File(s"$state/budget/batch=3").exists,
+      "the late batch is not covered, so GC must keep it")
+    assert(rows(Streams.ingestBudgetRead(spark, state).get) ==
+      rows(Prep.budgetPartial(docs)),
+      "batches 0-3 must each count once: base 0-2 plus delta 3")
+    assert(Streams.compactBudget(spark, state) == Some(3L))
+    assert(rows(Streams.ingestBudgetRead(spark, state).get) ==
+      rows(Prep.budgetPartial(docs)))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(state))
+  }
+
   test("foreachBatch ingest centroids: streamed == one-shot batch, across restart + compact") {
     import graft.operators.Similarity
     val root = java.nio.file.Files.createTempDirectory("graft_ingest_cent_").toFile
